@@ -111,7 +111,11 @@ def test_reliable_checkpoint_dir(spark, masked, tmp_path):
     s2 = st_reliable.fit(masked).ss_summary
     assert s1 == s2
     import os
-    assert os.listdir(tmp_path / "ckpt")  # checkpoint data actually written
+    # checkpoint data actually written, into ONE <uuid> subdirectory:
+    # the context's checkpoint dir is set once, not once per truncation
+    subdirs = os.listdir(tmp_path / "ckpt")
+    assert len(subdirs) == 1, subdirs
+    assert os.listdir(tmp_path / "ckpt" / subdirs[0])
 
 
 def test_self_training_model_persistence(spark, masked, tmp_path):

@@ -99,6 +99,25 @@ def test_works_without_posterior(masked):
     assert out.where(~F.col("prediction").isin(0.0, 1.0)).count() == 0
 
 
+def test_pipeline_stage_through_cross_validate(masked):
+    """TriTraining is a pyspark Estimator, so it runs as a Pipeline stage
+    through the k-fold harness like the other SSC families."""
+    from pyspark.ml import Pipeline
+
+    from tfm_semisup_spark.operators.evaluation import cross_validate
+
+    data = masked.select("vec_id", "features", "label", "labelSelection")
+    pipe = Pipeline(
+        stages=[TriTraining(baseClassifier=DecisionTreeClassifier(seed=5), maxIter=2)]
+    )
+    cv = cross_validate(data, pipe, k=2, id_col="vec_id")
+    s = cv.ss_summary
+    fold_size = data.count() / 2  # mean training-set size at k=2
+    assert abs(s.labeled_initial + s.unlabeled_initial - fold_size) <= 1
+    assert abs(s.labeled_final + s.unlabeled_final - fold_size) <= 1
+    assert 1 <= s.iterations <= 2
+
+
 def test_save_load_roundtrip(fitted, masked, tmp_path):
     model, _ = fitted
     path = str(tmp_path / "tri_model")

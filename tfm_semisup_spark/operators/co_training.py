@@ -8,39 +8,40 @@ cross-teach — model 1's confident pseudo-labels are appended to model
 2's labeled pool and vice versa (``:172-173``, ``:215-216``); the final
 model is fit on the union of both labeled pools (``:251``). That
 deviation from classic feature-split co-training is preserved for
-parity (SURVEY.md §2.1 C3) as the DEFAULT; ``viewSplit='features'``
-additionally implements the published Blum & Mitchell algorithm —
-disjoint feature-column views over one shared pool (VERDICT r5 #7).
+parity (SURVEY.md §2.1 C3) as the DEFAULT, and runs the promotion loop
+shared with self-training (operators/ssc_base.py) over two views.
+``viewSplit='features'`` additionally implements the published Blum &
+Mitchell algorithm — disjoint feature-column views over one shared pool
+(VERDICT r5 #7).
 
 Same promotion criteria as SelfTraining (threshold / kBest; in kBest
 the per-iteration budget comes from the TOTAL unlabeled count,
-``CoTraining.scala:199``, and applies to each view). Same physical
-re-engineering: isnan complementary-filter split, localCheckpoint per
-iteration, arithmetic pool-size bookkeeping, codegen'd probMax.
+``CoTraining.scala:199``, and applies to each view).
 """
 
 from __future__ import annotations
 
 from pyspark import keyword_only
-from pyspark.ml import Estimator
 from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tfm_semisup_spark.functions.vector import prob_max
 from tfm_semisup_spark.operators.lineage import release
 from tfm_semisup_spark.operators.results import SemiSupervisedSummary
-from tfm_semisup_spark.operators.self_training import (
-    SelfTrainingModel,
-    _SSCParams,
-    kbest_order,
+from tfm_semisup_spark.operators.self_training import SelfTrainingModel
+from tfm_semisup_spark.operators.ssc_base import (
+    CRITERIA,
+    _PromotingSSC,
+    _View,
     require_probabilistic,
 )
-from tfm_semisup_spark.functions.vector import prob_max
 
 _SPLIT_SEED = 8  # reference: `CoTraining.scala:137,140`
+VIEW_SPLITS = ("instances", "features")
 
 
-class CoTraining(Estimator, _SSCParams):
+class CoTraining(_PromotingSSC):
     """Defaults mirror the reference (``CoTraining.scala:25-30``):
     threshold=0.7, maxIter=3, criterion='threshold', kBest=1.0.
 
@@ -76,8 +77,8 @@ class CoTraining(Estimator, _SSCParams):
         viewSplit: str = "instances",
     ):
         super().__init__()
-        self.baseClassifier = baseClassifier
-        self._setDefault(
+        self._init_ssc(
+            dict(self._input_kwargs),
             threshold=0.7,
             maxIter=3,
             criterion="threshold",
@@ -88,177 +89,57 @@ class CoTraining(Estimator, _SSCParams):
             checkpointDir="",
             viewSplit="instances",
         )
-        kwargs = dict(self._input_kwargs)
-        kwargs.pop("baseClassifier", None)
-        self._set(**kwargs)
-        self.last_fit_summary: SemiSupervisedSummary | None = None
-
-    def copy(self, extra=None):
-        new = CoTraining(baseClassifier=self.baseClassifier)
-        return self._copyValues(new, extra)
-
-    def _score(self, model, pool: DataFrame) -> DataFrame:
-        feats = self.getOrDefault(self.featuresCol)
-        prob_col = model.getProbabilityCol() if hasattr(model, "getProbabilityCol") else "probability"
-        return self._truncate_lineage(
-            model.transform(pool)
-            .withColumn("probMax", prob_max(prob_col))
-            .select(feats, "prediction", "probMax")
-        )
-
-    def _promote(self, preds: DataFrame, k: int, n_pool: int):
-        """Split one view's scored pool into (promoted, rest, n_promoted)."""
-        criterion = self.getOrDefault(self.criterion)
-        feats = self.getOrDefault(self.featuresCol)
-        label = self.getOrDefault(self.labelCol)
-        if criterion == "threshold":
-            confident = F.col("probMax") > self.getOrDefault(self.threshold)
-            promoted = preds.where(confident)
-            rest = preds.where(~confident)
-            n_promoted = promoted.count()
-        else:
-            promoted = preds.orderBy(*kbest_order(feats)).limit(k)
-            rest = preds.exceptAll(promoted)
-            n_promoted = min(k, n_pool)
-        as_labeled = promoted.select(feats, F.col("prediction").alias(label))
-        as_unlabeled = rest.select(feats, F.col("prediction").alias(label))
-        return as_labeled, as_unlabeled, n_promoted
 
     def _fit(self, dataset: DataFrame) -> SelfTrainingModel:
         require_probabilistic(self.baseClassifier)
-        criterion = self.getOrDefault(self.criterion)
-        if criterion not in ("threshold", "kBest"):
-            raise ValueError(f"unknown criterion {criterion!r}")
-        view_split = self.getOrDefault(self.viewSplit)
-        if view_split not in ("instances", "features"):
-            raise ValueError(f"unknown viewSplit {view_split!r}")
-        if view_split == "features":
+        self._choice(self.criterion, CRITERIA)
+        if self._choice(self.viewSplit, VIEW_SPLITS) == "features":
             return self._fit_feature_split(dataset)
-        base = self.baseClassifier
-        max_iter = self.getOrDefault(self.maxIter)
-        sel = self.getOrDefault(self.labelSelectionCol)
-        feats = self.getOrDefault(self.featuresCol)
-        label = self.getOrDefault(self.labelCol)
-
-        counts = {
-            row["unlabeled"]: row["n"]
-            for row in dataset.groupBy(F.isnan(sel).alias("unlabeled"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        n_lab_ini = counts.get(False, 0)
-        n_unlab_ini = counts.get(True, 0)
-
-        labeled = dataset.where(~F.isnan(sel)).select(
-            feats, F.col(label).cast("double").alias(label)
-        )
-        unlabeled = dataset.where(F.isnan(sel)).select(
-            feats, F.col(label).cast("double").alias(label)
-        )
+        labeled, unlabeled, n_lab, n_unlab = self._split_pools(dataset)
         lab1, lab2 = labeled.randomSplit([0.5, 0.5], seed=_SPLIT_SEED)
         unlab1, unlab2 = unlabeled.randomSplit([0.5, 0.5], seed=_SPLIT_SEED)
         # checkpoint ALL four views before counting: the counts then scan
         # materialized data instead of re-running the upstream
-        # featurization once per count() action
-        lab1 = self._truncate_lineage(lab1)
-        lab2 = self._truncate_lineage(lab2)
-        unlab1 = self._truncate_lineage(unlab1)
-        unlab2 = self._truncate_lineage(unlab2)
+        # featurization once per count() action; the second view's sizes
+        # follow from the split pass's totals
+        lab1, lab2, unlab1, unlab2 = (
+            self._truncate_lineage(df) for df in (lab1, lab2, unlab1, unlab2)
+        )
         n_unlab1 = unlab1.count()
-        n_unlab2 = unlab2.count()
         n_lab1 = lab1.count()
-        n_lab2 = lab2.count()
-
-        model1 = base.fit(lab1)
-        model2 = base.fit(lab2)
-        it = 1
-
-        k = 0
-        if criterion == "kBest" and max_iter > 1:
-            # budget from the TOTAL unlabeled pool (`CoTraining.scala:199`)
-            k = int(round(self.getOrDefault(self.kBest) * n_unlab_ini / (max_iter - 1)))
-
-        # pool_src_{1,2}: the checkpoint each view's `unlabX` lazily
-        # reads from; freed once the round's scoring re-materializes it
-        # into predsX (operators/lineage.py:release)
-        pool_src1, pool_src2 = unlab1, unlab2
-        while it < max_iter and n_unlab1 > 0 and n_unlab2 > 0:
-            preds1 = self._score(model1, unlab1)
-            preds2 = self._score(model2, unlab2)
-            release(pool_src1)
-            release(pool_src2)
-            pool_src1, pool_src2 = preds1, preds2
-            promo1, unlab1, n_promo1 = self._promote(preds1, k, n_unlab1)
-            promo2, unlab2, n_promo2 = self._promote(preds2, k, n_unlab2)
-
-            # cross-teaching: view 1 learns from view 2's confident labels
-            # and vice versa (`CoTraining.scala:172-173`)
-            grown1 = self._truncate_lineage(lab1.unionAll(promo2))
-            grown2 = self._truncate_lineage(lab2.unionAll(promo1))
-            release(lab1)
-            release(lab2)
-            lab1, lab2 = grown1, grown2
-            n_unlab1 -= n_promo1
-            n_unlab2 -= n_promo2
-            n_lab1 += n_promo2
-            n_lab2 += n_promo1
-
-            if n_unlab1 > 0 and n_unlab2 > 0 and it < max_iter:
-                model1 = base.fit(lab1)
-                model2 = base.fit(lab2)
-                it += 1
-
+        views = [
+            _View(lab1, unlab1, n_lab1, n_unlab1, source=unlab1),
+            _View(lab2, unlab2, n_lab - n_lab1, n_unlab - n_unlab1, source=unlab2),
+        ]
+        model, it = self._run_views(views)
         summary = SemiSupervisedSummary(
-            labeled_initial=n_lab_ini,
-            unlabeled_initial=n_unlab_ini,
-            labeled_final=n_lab1 + n_lab2,
-            unlabeled_final=n_unlab1 + n_unlab2,
+            labeled_initial=n_lab,
+            unlabeled_initial=n_unlab,
+            labeled_final=sum(v.n_labeled for v in views),
+            unlabeled_final=sum(v.n_unlabeled for v in views),
             iterations=it,
         )
-        self.last_fit_summary = summary
-        # final model: fit on the union of both views' pools
-        # (`CoTraining.scala:251`)
-        final_model = base.fit(lab1.unionAll(lab2))
-        release(pool_src1)
-        release(pool_src2)
-        release(lab1)
-        release(lab2)
-        return SelfTrainingModel(final_model, summary)
+        return self._publish(SelfTrainingModel(model, summary))
 
     def _fit_feature_split(self, dataset: DataFrame) -> SelfTrainingModel:
         """Classic Blum-Mitchell co-training (viewSplit='features'):
         the feature vector is sliced into two disjoint halves; one
         shared labeled pool trains two classifiers, each seeing only
-        its half. Both score the SHARED unlabeled pool; a row is
-        promoted when either view is confident (threshold) or lands in
-        the global top-k by the better view's posterior (kBest), with
-        the higher-posterior view supplying the pseudo-label. The
-        final model is fit on the FULL feature vector so it is usable
-        downstream exactly like the instance-split model.
+        its half. Both score the SHARED unlabeled pool; a row's
+        confidence is the better view's posterior, which also supplies
+        the pseudo-label, and the shared promotion applies (threshold:
+        either view is confident; kBest: global top-k). The final model
+        is fit on the FULL feature vector so it is usable downstream
+        exactly like the instance-split model.
 
-        Physical shape matches the instance-split loop: per-iteration
-        lineage truncation, complementary filters, arithmetic pool
-        bookkeeping; both models score the same checkpointed pool, so
-        each iteration costs two narrow model scans plus the MLlib
-        fits."""
+        Each round costs two narrow model scans of the one checkpointed
+        pool plus the MLlib fits."""
         from pyspark.ml.feature import VectorSlicer
-        from pyspark.ml.functions import vector_to_array
 
         base = self.baseClassifier
-        criterion = self.getOrDefault(self.criterion)
         max_iter = self.getOrDefault(self.maxIter)
-        sel = self.getOrDefault(self.labelSelectionCol)
         feats = self.getOrDefault(self.featuresCol)
         label = self.getOrDefault(self.labelCol)
-
-        counts = {
-            row["unlabeled"]: row["n"]
-            for row in dataset.groupBy(F.isnan(sel).alias("unlabeled"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        n_lab_ini = counts.get(False, 0)
-        n_unlab_ini = counts.get(True, 0)
 
         head = dataset.select(feats).head()
         if head is None:
@@ -271,99 +152,55 @@ class CoTraining(Estimator, _SSCParams):
         half = dim // 2
         s1 = VectorSlicer(inputCol=feats, outputCol="__v1", indices=list(range(half)))
         s2 = VectorSlicer(inputCol=feats, outputCol="__v2", indices=list(range(half, dim)))
-        ds = s2.transform(s1.transform(dataset))
-
-        labeled = self._truncate_lineage(
-            ds.where(~F.isnan(sel)).select(
-                feats, "__v1", "__v2", F.col(label).cast("double").alias(label)
-            )
+        cols = (feats, "__v1", "__v2")
+        labeled, unlabeled, n_lab_ini, n_unlab_ini = self._split_pools(
+            s2.transform(s1.transform(dataset)), *cols[1:]
         )
-        unlabeled = self._truncate_lineage(
-            ds.where(F.isnan(sel)).select(feats, "__v1", "__v2")
-        )
+        labeled = self._truncate_lineage(labeled)
+        unlabeled = self._truncate_lineage(unlabeled.select(*cols))
         n_lab, n_unlab = n_lab_ini, n_unlab_ini
 
         base1 = base.copy({base.featuresCol: "__v1"})
         base2 = base.copy({base.featuresCol: "__v2"})
-        model1 = base1.fit(labeled)
-        model2 = base2.fit(labeled)
+        k = self._kbest_budget(n_unlab_ini)
         it = 1
-
-        k = 0
-        if criterion == "kBest" and max_iter > 1:
-            k = int(round(self.getOrDefault(self.kBest) * n_unlab_ini / (max_iter - 1)))
-
         pool_src = unlabeled
         while it < max_iter and n_unlab > 0:
-            p1 = model1.getProbabilityCol() if hasattr(model1, "getProbabilityCol") else "probability"
+            model1 = base1.fit(labeled)
+            model2 = base2.fit(labeled)
             scored = model1.transform(unlabeled).select(
-                feats,
-                "__v1",
-                "__v2",
+                *cols,
                 F.col("prediction").alias("__pred1"),
-                prob_max(p1).alias("__pm1"),
+                prob_max(model1.getProbabilityCol()).alias("__pm1"),
             )
-            p2 = model2.getProbabilityCol() if hasattr(model2, "getProbabilityCol") else "probability"
+            scored = model2.transform(scored).select(
+                *cols,
+                "__pred1",
+                "__pm1",
+                F.col("prediction").alias("__pred2"),
+                prob_max(model2.getProbabilityCol()).alias("__pm2"),
+            )
+            # the better-posterior view supplies confidence and label
             scored = self._truncate_lineage(
-                model2.transform(scored).select(
-                    feats,
-                    "__v1",
-                    "__v2",
-                    "__pred1",
-                    "__pm1",
-                    F.col("prediction").alias("__pred2"),
-                    prob_max(p2).alias("__pm2"),
+                scored.withColumn("probMax", F.greatest("__pm1", "__pm2")).withColumn(
+                    "prediction",
+                    F.when(F.col("__pm1") >= F.col("__pm2"), F.col("__pred1")).otherwise(
+                        F.col("__pred2")
+                    ),
                 )
             )
             release(pool_src)
             pool_src = scored
 
-            if criterion == "threshold":
-                t = self.getOrDefault(self.threshold)
-                either = (F.col("__pm1") > t) | (F.col("__pm2") > t)
-                # view 1 supplies the label iff it is confident AND
-                # (better than view 2 OR view 2 is not confident)
-                winner = F.when(
-                    (F.col("__pm1") > t)
-                    & ((F.col("__pm1") >= F.col("__pm2")) | (F.col("__pm2") <= t)),
-                    F.col("__pred1"),
-                ).otherwise(F.col("__pred2"))
-                promoted = scored.where(either)
-                rest = scored.where(~either)
-                n_promoted = promoted.count()
-            else:
-                # the better-posterior view supplies the pseudo-label
-                winner = F.when(
-                    F.col("__pm1") >= F.col("__pm2"), F.col("__pred1")
-                ).otherwise(F.col("__pred2"))
-                with_best = scored.withColumn(
-                    "__best", F.greatest("__pm1", "__pm2")
-                )
-                order = [
-                    F.desc("__best"),
-                    F.xxhash64(
-                        vector_to_array(F.col(feats)),
-                        F.col("__pred1"),
-                        F.col("__pred2"),
-                    ),
-                ]
-                promoted = with_best.orderBy(*order).limit(k).drop("__best")
-                rest = scored.exceptAll(promoted)
-                n_promoted = min(k, n_unlab)
-
-            as_labeled = promoted.select(
-                feats, "__v1", "__v2", winner.alias(label)
+            promoted, unlabeled, n_promoted = self._promote(
+                scored, k, n_unlab, *cols, tie=("__pred1", "__pred2")
             )
-            unlabeled = rest.select(feats, "__v1", "__v2")
-            grown = self._truncate_lineage(labeled.unionAll(as_labeled))
+            grown = self._truncate_lineage(labeled.unionAll(promoted))
             release(labeled)
             labeled = grown
             n_unlab -= n_promoted
             n_lab += n_promoted
-
-            if n_unlab > 0 and it < max_iter:
-                model1 = base1.fit(labeled)
-                model2 = base2.fit(labeled)
+            if n_unlab > 0:
                 it += 1
 
         summary = SemiSupervisedSummary(
@@ -373,8 +210,7 @@ class CoTraining(Estimator, _SSCParams):
             unlabeled_final=n_unlab,
             iterations=it,
         )
-        self.last_fit_summary = summary
         final_model = base.fit(labeled.select(feats, label))
         release(pool_src)
         release(labeled)
-        return SelfTrainingModel(final_model, summary)
+        return self._publish(SelfTrainingModel(final_model, summary))

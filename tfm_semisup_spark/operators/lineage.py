@@ -49,11 +49,22 @@ def truncate(
     checkpoint that is unpersisted before any action would recompute.
     """
     if checkpoint_dir:
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() != checkpoint_dir:
-            sc.setCheckpointDir(checkpoint_dir)
+        _use_checkpoint_dir(df.sparkSession.sparkContext, checkpoint_dir)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def _use_checkpoint_dir(sc, checkpoint_dir: str) -> None:
+    """Point the context's checkpoint directory into ``checkpoint_dir``
+    unless it already is. ``setCheckpointDir`` creates a fresh
+    ``<qualified dir>/<uuid>`` subdirectory on every call, so the current
+    setting is compared against the qualified form of the argument."""
+    jvm = sc._jvm
+    path = jvm.org.apache.hadoop.fs.Path(checkpoint_dir)
+    qualified = path.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(path)
+    current = sc.getCheckpointDir()
+    if current is None or not current.startswith(qualified.toString().rstrip("/") + "/"):
+        sc.setCheckpointDir(checkpoint_dir)
 
 
 def release(df: DataFrame | None) -> None:

@@ -6,27 +6,9 @@ unlabeled pool; promote confident predictions (threshold criterion:
 ``probMax > threshold``, ``SelfTraining.scala:146-170``; kBest
 criterion: global top-k by ``probMax``, ``:172-196``) into the labeled
 pool with their predicted label; repeat until maxIter or no unlabeled
-rows remain.
-
-Deliberate re-engineering vs the reference (SURVEY.md §4):
-
-- labeled/unlabeled split by complementary ``isnan`` filters instead of
-  ``filter(isNaN)`` + full-dataset ``exceptAll`` (`SelfTraining.scala:
-  129-130`) — the sentinel column itself is the split key, so the
-  exceptAll shuffle of the whole dataset is pure waste. ``exceptAll``
-  is kept only where multiset semantics are load-bearing: the kBest
-  "rest = predictions − top-k" (`:178`).
-- one ``groupBy(condition).count()`` pass per iteration instead of the
-  reference's 2-4 separate ``count()`` actions (`:133-140,156-157`);
-  pool sizes are then maintained arithmetically.
-- ``localCheckpoint`` on each iteration's predictions and on the grown
-  labeled pool: the reference's plan grows every iteration
-  (union-of-unions re-evaluated at each action; its cache() calls are
-  immediately undone by unpersist, `:143-144,167-168`). Checkpointing
-  truncates lineage — the one genuinely custom physical concern in the
-  rebuild, and what makes 100+ iterations viable on a cluster.
-- max posterior via ``array_max(vector_to_array(probability))`` instead
-  of a UDF (`:128`) — stays inside whole-stage codegen.
+rows remain. This is the one-view case of the promotion loop shared with
+instance-split co-training (operators/ssc_base.py, which also documents
+the physical re-engineering vs the reference).
 
 The fitted ``SelfTrainingModel`` delegates transform to the final base
 model and carries the pool bookkeeping as ``ss_summary`` (replacing the
@@ -36,95 +18,17 @@ reference's mutable SemiSupervisedDataResults side-channel).
 from __future__ import annotations
 
 from pyspark import keyword_only
-from pyspark.ml import Estimator, Model
-from pyspark.ml.param import Param, Params, TypeConverters
+from pyspark.ml import Model
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from tfm_semisup_spark.functions.vector import prob_max
-from tfm_semisup_spark.operators.lineage import release
 from tfm_semisup_spark.operators.results import SemiSupervisedSummary
-
-CRITERIA = ("threshold", "kBest")
-
-
-def kbest_order(features_col: str) -> list:
-    """Deterministic kBest promotion order: probMax descending, ties
-    broken by a hash of (features, prediction). The reference's
-    ``orderBy(desc("probMax")).limit(k)`` (`SelfTraining.scala:177`)
-    leaves tie-breaking to partition order — rerun- and
-    partitioning-sensitive, which violates this repo's determinism rule
-    for rows-only checks. The hash tie-break is content-defined, so the
-    same rows win regardless of cluster layout. (Identical duplicate
-    rows remain interchangeable — multiset semantics make either pick
-    equivalent.)"""
-    from pyspark.ml.functions import vector_to_array
-
-    return [
-        F.desc("probMax"),
-        F.xxhash64(vector_to_array(F.col(features_col)), F.col("prediction")),
-    ]
-
-
-def require_probabilistic(classifier) -> None:
-    """Runtime stand-in for the reference's ProbabilisticClassifier
-    generic bound (``SelfTraining.scala:17-24``): any classifier whose
-    model emits a probability column qualifies; LinearSVC et al. do not
-    (same exclusion the reference applies — SURVEY §2.2)."""
-    if not hasattr(classifier, "getProbabilityCol"):
-        raise TypeError(
-            f"{type(classifier).__name__} exposes no probabilityCol; "
-            "self/co-training needs a probabilistic classifier"
-        )
-
-
-class _SSCParams(Params):
-    threshold = Param(
-        Params._dummy(),
-        "threshold",
-        "min posterior to promote a pseudo-label (criterion=threshold)",
-        TypeConverters.toFloat,
-    )
-    maxIter = Param(
-        Params._dummy(), "maxIter", "max training iterations", TypeConverters.toInt
-    )
-    criterion = Param(
-        Params._dummy(), "criterion", "promotion criterion: threshold | kBest",
-        TypeConverters.toString,
-    )
-    kBest = Param(
-        Params._dummy(),
-        "kBest",
-        "fraction of the unlabeled pool promoted over the run (criterion=kBest)",
-        TypeConverters.toFloat,
-    )
-    labelSelectionCol = Param(
-        Params._dummy(),
-        "labelSelectionCol",
-        "masked label column; NaN == unlabeled",
-        TypeConverters.toString,
-    )
-    featuresCol = Param(
-        Params._dummy(), "featuresCol", "features column", TypeConverters.toString
-    )
-    labelCol = Param(Params._dummy(), "labelCol", "label column", TypeConverters.toString)
-    checkpointDir = Param(
-        Params._dummy(),
-        "checkpointDir",
-        "reliable checkpoint directory (HDFS/S3); empty -> localCheckpoint",
-        TypeConverters.toString,
-    )
-
-    def _truncate_lineage(self, df: DataFrame) -> DataFrame:
-        """Lineage truncation per iteration (SURVEY §4: the one custom
-        physical concern). localCheckpoint is fast but pins blocks to
-        executors — on a real cluster with dynamic allocation or
-        preemption, set checkpointDir to durable storage and pay the
-        write for restart-safety. Superseded checkpoints are freed
-        eagerly in the fit loops (operators/lineage.py:release)."""
-        from tfm_semisup_spark.operators.lineage import truncate
-
-        return truncate(df, self.getOrDefault(self.checkpointDir) or None)
+from tfm_semisup_spark.operators.ssc_base import (  # noqa: F401 (re-exported)
+    CRITERIA,
+    _PromotingSSC,
+    _View,
+    kbest_order,
+    require_probabilistic,
+)
 
 
 class SelfTrainingModel(Model):
@@ -174,7 +78,7 @@ class SelfTrainingModel(Model):
         return SelfTrainingModel(base, SemiSupervisedSummary(**meta["ss_summary"]))
 
 
-class SelfTraining(Estimator, _SSCParams):
+class SelfTraining(_PromotingSSC):
     """Defaults mirror the reference (``SelfTraining.scala:26-30``):
     threshold=0.7, maxIter=7, criterion='threshold', kBest=1.0. The
     masked-label column defaults to 'labelSelection' (the reference
@@ -196,8 +100,8 @@ class SelfTraining(Estimator, _SSCParams):
         checkpointDir: str = "",
     ):
         super().__init__()
-        self.baseClassifier = baseClassifier
-        self._setDefault(
+        self._init_ssc(
+            dict(self._input_kwargs),
             threshold=0.7,
             maxIter=7,
             criterion="threshold",
@@ -207,113 +111,18 @@ class SelfTraining(Estimator, _SSCParams):
             labelCol="label",
             checkpointDir="",
         )
-        kwargs = dict(self._input_kwargs)
-        kwargs.pop("baseClassifier", None)
-        self._set(**kwargs)
-        self.last_fit_summary: SemiSupervisedSummary | None = None
-
-    def copy(self, extra=None):
-        new = SelfTraining(baseClassifier=self.baseClassifier)
-        return self._copyValues(new, extra)
-
-    # -- pool helpers -------------------------------------------------
-
-    def _split_pools(self, dataset: DataFrame):
-        """Complementary isnan filters + ONE count pass (vs the
-        reference's exceptAll + two count jobs)."""
-        sel = self.getOrDefault(self.labelSelectionCol)
-        feats = self.getOrDefault(self.featuresCol)
-        label = self.getOrDefault(self.labelCol)
-        counts = {
-            row["unlabeled"]: row["n"]
-            for row in dataset.groupBy(F.isnan(sel).alias("unlabeled"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        labeled = dataset.where(~F.isnan(sel)).select(feats, F.col(label).cast("double").alias(label))
-        unlabeled = dataset.where(F.isnan(sel)).select(feats, F.col(label).cast("double").alias(label))
-        return labeled, unlabeled, counts.get(False, 0), counts.get(True, 0)
-
-    def _predict_pool(self, model, unlabeled: DataFrame) -> DataFrame:
-        """Score the unlabeled pool; checkpoint so each iteration's plan
-        starts from materialized data, not the whole history."""
-        feats = self.getOrDefault(self.featuresCol)
-        prob_col = model.getProbabilityCol() if hasattr(model, "getProbabilityCol") else "probability"
-        return self._truncate_lineage(
-            model.transform(unlabeled)
-            .withColumn("probMax", prob_max(prob_col))
-            .select(feats, "prediction", "probMax")
-        )
-
-    # -- fit ----------------------------------------------------------
 
     def _fit(self, dataset: DataFrame) -> SelfTrainingModel:
         require_probabilistic(self.baseClassifier)
-        criterion = self.getOrDefault(self.criterion)
-        if criterion not in CRITERIA:
-            raise ValueError(f"criterion must be one of {CRITERIA}, got {criterion!r}")
-        base = self.baseClassifier
-        max_iter = self.getOrDefault(self.maxIter)
-        feats = self.getOrDefault(self.featuresCol)
-        label = self.getOrDefault(self.labelCol)
-
+        self._choice(self.criterion, CRITERIA)
         labeled, unlabeled, n_lab, n_unlab = self._split_pools(dataset)
-        labeled = self._truncate_lineage(labeled)
-        n_lab_ini, n_unlab_ini = n_lab, n_unlab
-
-        model = base.fit(labeled)
-        it = 1
-
-        if criterion == "kBest":
-            # promotion budget per iteration, fixed up front
-            # (`SelfTraining.scala:173`)
-            k = int(round(self.getOrDefault(self.kBest) * n_unlab / (max_iter - 1))) if max_iter > 1 else 0
-
-        prev_preds = None
-        while it < max_iter and n_unlab > 0:
-            preds = self._predict_pool(model, unlabeled)
-            # `unlabeled` (a lazy select over the previous round's preds
-            # checkpoint) was just re-materialized into `preds`; the old
-            # blocks are now unreachable — free them before the fit.
-            release(prev_preds)
-            prev_preds = preds
-            if criterion == "threshold":
-                t = self.getOrDefault(self.threshold)
-                confident = F.col("probMax") > t
-                promoted = preds.where(confident)
-                rest = preds.where(~confident)
-                n_promoted = promoted.count()
-            else:
-                top_k = preds.orderBy(*kbest_order(feats)).limit(k)
-                rest = preds.exceptAll(top_k)
-                promoted = top_k
-                n_promoted = min(k, n_unlab)
-
-            grown = self._truncate_lineage(
-                labeled.unionAll(
-                    promoted.select(feats, F.col("prediction").alias(label))
-                )
-            )
-            release(labeled)
-            labeled = grown
-            unlabeled = rest.select(feats, F.col("prediction").alias(label))
-            n_lab += n_promoted
-            n_unlab -= n_promoted
-
-            model = base.fit(labeled)
-            if n_unlab > 0 and it < max_iter:
-                it += 1
-            else:
-                break
-
-        release(prev_preds)
-        release(labeled)
+        view = _View(self._truncate_lineage(labeled), unlabeled, n_lab, n_unlab)
+        model, it = self._run_views([view])
         summary = SemiSupervisedSummary(
-            labeled_initial=n_lab_ini,
-            unlabeled_initial=n_unlab_ini,
-            labeled_final=n_lab,
-            unlabeled_final=n_unlab,
+            labeled_initial=n_lab,
+            unlabeled_initial=n_unlab,
+            labeled_final=view.n_labeled,
+            unlabeled_final=view.n_unlabeled,
             iterations=it,
         )
-        self.last_fit_summary = summary
-        return SelfTrainingModel(model, summary)
+        return self._publish(SelfTrainingModel(model, summary))

@@ -1,24 +1,22 @@
 """Supervised baseline wrapper (reference C4: ``Supervised.scala:38-42``).
 
-Drops unlabeled rows and fits the base classifier on the rest. The
-reference computes the labeled set as ``isNaN filter + exceptAll`` —
-a full shuffle where a complementary filter is semantically identical
-(the split key IS the sentinel column; SURVEY.md §4) — so here it is a
-single pushdown-friendly filter.
+Drops unlabeled rows and fits the base classifier on the rest, through
+the shared pool split (operators/ssc_base.py): one pushdown-friendly
+filter where the reference shuffles the whole dataset through
+``exceptAll``.
 """
 
 from __future__ import annotations
 
 from pyspark import keyword_only
-from pyspark.ml import Estimator
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from tfm_semisup_spark.operators.results import SemiSupervisedSummary
-from tfm_semisup_spark.operators.self_training import SelfTrainingModel, _SSCParams
+from tfm_semisup_spark.operators.self_training import SelfTrainingModel
+from tfm_semisup_spark.operators.ssc_base import _SSCEstimator
 
 
-class Supervised(Estimator, _SSCParams):
+class Supervised(_SSCEstimator):
     @keyword_only
     def __init__(
         self,
@@ -29,37 +27,15 @@ class Supervised(Estimator, _SSCParams):
         labelCol: str = "label",
     ):
         super().__init__()
-        self.baseClassifier = baseClassifier
-        self._setDefault(
+        self._init_ssc(
+            dict(self._input_kwargs),
             labelSelectionCol="labelSelection",
             featuresCol="features",
             labelCol="label",
-            checkpointDir="",
         )
-        kwargs = dict(self._input_kwargs)
-        kwargs.pop("baseClassifier", None)
-        self._set(**kwargs)
-        self.last_fit_summary: SemiSupervisedSummary | None = None
-
-    def copy(self, extra=None):
-        new = Supervised(baseClassifier=self.baseClassifier)
-        return self._copyValues(new, extra)
 
     def _fit(self, dataset: DataFrame) -> SelfTrainingModel:
-        sel = self.getOrDefault(self.labelSelectionCol)
-        feats = self.getOrDefault(self.featuresCol)
-        label = self.getOrDefault(self.labelCol)
-        counts = {
-            row["unlabeled"]: row["n"]
-            for row in dataset.groupBy(F.isnan(sel).alias("unlabeled"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        n_lab = counts.get(False, 0)
-        n_unlab = counts.get(True, 0)
-        labeled = dataset.where(~F.isnan(sel)).select(
-            feats, F.col(label).cast("double").alias(label)
-        )
+        labeled, _, n_lab, n_unlab = self._split_pools(dataset)
         summary = SemiSupervisedSummary(
             labeled_initial=n_lab,
             unlabeled_initial=n_unlab,
@@ -67,5 +43,4 @@ class Supervised(Estimator, _SSCParams):
             unlabeled_final=n_unlab,
             iterations=0,
         )
-        self.last_fit_summary = summary
-        return SelfTrainingModel(self.baseClassifier.fit(labeled), summary)
+        return self._publish(SelfTrainingModel(self.baseClassifier.fit(labeled), summary))

@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 
 from tfm_semisup_spark.operators.lineage import release
 from tfm_semisup_spark.operators.results import SemiSupervisedSummary
-from tfm_semisup_spark.operators.self_training import _SSCParams
+from tfm_semisup_spark.operators.ssc_base import _IterativeSSC
 
 #: deterministic stand-in for bootstrap sampling: keep rows whose
 #: content hash lands under 632/1000 (a bootstrap's expected unique
@@ -116,10 +116,12 @@ class TriTrainingModel(Model):
         return TriTrainingModel(models, SemiSupervisedSummary(**meta["ss_summary"]))
 
 
-class TriTraining(_SSCParams):
+class TriTraining(_IterativeSSC):
     """Zhou & Li 2005 defaults: maxIter bounds the outer rounds (the
     paper runs to stability; 10 is far past convergence on the test
     fixtures). ``seed`` diversifies the three hash-subsamples."""
+
+    _copy_attrs = ("baseClassifier", "seed")
 
     @keyword_only
     def __init__(
@@ -134,24 +136,17 @@ class TriTraining(_SSCParams):
         seed: int = 13,
     ):
         super().__init__()
-        self.baseClassifier = baseClassifier
         self.seed = seed
-        self._setDefault(
+        kwargs = dict(self._input_kwargs)
+        kwargs.pop("seed", None)
+        self._init_ssc(
+            kwargs,
             maxIter=10,
             labelSelectionCol="labelSelection",
             featuresCol="features",
             labelCol="label",
             checkpointDir="",
         )
-        kwargs = dict(self._input_kwargs)
-        kwargs.pop("baseClassifier", None)
-        kwargs.pop("seed", None)
-        self._set(**kwargs)
-        self.last_fit_summary: SemiSupervisedSummary | None = None
-
-    def copy(self, extra=None):
-        new = TriTraining(baseClassifier=self.baseClassifier, seed=self.seed)
-        return self._copyValues(new, extra)
 
     # -- helpers -------------------------------------------------------
 
@@ -169,28 +164,15 @@ class TriTraining(_SSCParams):
             )
         return self._truncate_lineage(out.select(*extra_cols, "__p0", "__p1", "__p2"))
 
-    def fit(self, dataset: DataFrame) -> TriTrainingModel:
+    def _fit(self, dataset: DataFrame) -> TriTrainingModel:
         base = self.baseClassifier
         max_iter = self.getOrDefault(self.maxIter)
-        sel = self.getOrDefault(self.labelSelectionCol)
         feats = self.getOrDefault(self.featuresCol)
         label = self.getOrDefault(self.labelCol)
 
-        counts = {
-            row["unlabeled"]: row["n"]
-            for row in dataset.groupBy(F.isnan(sel).alias("unlabeled"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        n_lab_ini = counts.get(False, 0)
-        n_unlab_ini = counts.get(True, 0)
-
-        labeled = self._truncate_lineage(
-            dataset.where(~F.isnan(sel)).select(
-                feats, F.col(label).cast("double").alias(label)
-            )
-        )
-        unlabeled = self._truncate_lineage(dataset.where(F.isnan(sel)).select(feats))
+        labeled, unlabeled, n_lab_ini, n_unlab_ini = self._split_pools(dataset)
+        labeled = self._truncate_lineage(labeled)
+        unlabeled = self._truncate_lineage(unlabeled.select(feats))
 
         # diversified deterministic subsamples (bootstrap stand-in)
         models = []
@@ -295,7 +277,6 @@ class TriTraining(_SSCParams):
             unlabeled_final=n_unlab_ini - max_accept,
             iterations=it,
         )
-        self.last_fit_summary = summary
         release(labeled)
         release(unlabeled)
-        return TriTrainingModel(models, summary)
+        return self._publish(TriTrainingModel(models, summary))
