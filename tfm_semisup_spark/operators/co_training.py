@@ -111,14 +111,7 @@ class CoTraining(_PromotingSSC):
             _View(lab1, unlab1, n_lab1, n_unlab1, source=unlab1),
             _View(lab2, unlab2, n_lab - n_lab1, n_unlab - n_unlab1, source=unlab2),
         ]
-        model, it = self._run_views(views)
-        summary = SemiSupervisedSummary(
-            labeled_initial=n_lab,
-            unlabeled_initial=n_unlab,
-            labeled_final=sum(v.n_labeled for v in views),
-            unlabeled_final=sum(v.n_unlabeled for v in views),
-            iterations=it,
-        )
+        model, summary = self._run_views(views)
         return self._publish(SelfTrainingModel(model, summary))
 
     def _fit_feature_split(self, dataset: DataFrame) -> SelfTrainingModel:

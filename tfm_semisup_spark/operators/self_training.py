@@ -117,12 +117,5 @@ class SelfTraining(_PromotingSSC):
         self._choice(self.criterion, CRITERIA)
         labeled, unlabeled, n_lab, n_unlab = self._split_pools(dataset)
         view = _View(self._truncate_lineage(labeled), unlabeled, n_lab, n_unlab)
-        model, it = self._run_views([view])
-        summary = SemiSupervisedSummary(
-            labeled_initial=n_lab,
-            unlabeled_initial=n_unlab,
-            labeled_final=view.n_labeled,
-            unlabeled_final=view.n_unlabeled,
-            iterations=it,
-        )
+        model, summary = self._run_views([view])
         return self._publish(SelfTrainingModel(model, summary))

@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 
 from tfm_semisup_spark.functions.vector import prob_max
 from tfm_semisup_spark.operators.lineage import release, truncate
+from tfm_semisup_spark.operators.results import SemiSupervisedSummary
 
 CRITERIA = ("threshold", "kBest")
 
@@ -245,10 +246,12 @@ class _PromotingSSC(_IterativeSSC):
         loop stops when a view's pool empties or at maxIter. The final
         model is fit on the union of the views' labeled pools.
 
-        Returns (final base model, iterations)."""
+        Returns (final base model, summary over all views)."""
         base = self.baseClassifier
         max_iter = self.getOrDefault(self.maxIter)
-        k = self._kbest_budget(sum(v.n_unlabeled for v in views))
+        n_lab_ini = sum(v.n_labeled for v in views)
+        n_unlab_ini = sum(v.n_unlabeled for v in views)
+        k = self._kbest_budget(n_unlab_ini)
         it = 1
         while it < max_iter and all(v.n_unlabeled > 0 for v in views):
             models = [base.fit(v.labeled) for v in views]
@@ -274,4 +277,10 @@ class _PromotingSSC(_IterativeSSC):
         for v in views:
             release(v.source)
             release(v.labeled)
-        return final, it
+        return final, SemiSupervisedSummary(
+            labeled_initial=n_lab_ini,
+            unlabeled_initial=n_unlab_ini,
+            labeled_final=sum(v.n_labeled for v in views),
+            unlabeled_final=sum(v.n_unlabeled for v in views),
+            iterations=it,
+        )
