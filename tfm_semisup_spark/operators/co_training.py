@@ -8,11 +8,13 @@ cross-teach — model 1's confident pseudo-labels are appended to model
 2's labeled pool and vice versa (``:172-173``, ``:215-216``); the final
 model is fit on the union of both labeled pools (``:251``). That
 deviation from classic feature-split co-training is preserved for
-parity (SURVEY.md §2.1 C3) as the DEFAULT, and runs the promotion loop
-shared with self-training (operators/ssc_base.py) over two views.
-``viewSplit='features'`` additionally implements the published Blum &
-Mitchell algorithm — disjoint feature-column views over one shared pool
-(VERDICT r5 #7).
+parity (SURVEY.md §2.1 C3) as the DEFAULT. ``viewSplit='features'``
+additionally implements the published Blum & Mitchell algorithm —
+disjoint feature-column views over one shared pool (VERDICT r5 #7).
+Both splits run the promotion loop shared with self-training
+(operators/ssc_base.py): instance-split as two cross-teaching views,
+feature-split as one view whose round fits a classifier per feature
+half and scores with the better half's posterior.
 
 Same promotion criteria as SelfTraining (threshold / kBest; in kBest
 the per-iteration budget comes from the TOTAL unlabeled count,
@@ -27,8 +29,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tfm_semisup_spark.functions.vector import prob_max
-from tfm_semisup_spark.operators.lineage import release
-from tfm_semisup_spark.operators.results import SemiSupervisedSummary
 from tfm_semisup_spark.operators.self_training import SelfTrainingModel
 from tfm_semisup_spark.operators.ssc_base import (
     CRITERIA,
@@ -115,25 +115,20 @@ class CoTraining(_PromotingSSC):
         return self._publish(SelfTrainingModel(model, summary))
 
     def _fit_feature_split(self, dataset: DataFrame) -> SelfTrainingModel:
-        """Classic Blum-Mitchell co-training (viewSplit='features'):
-        the feature vector is sliced into two disjoint halves; one
-        shared labeled pool trains two classifiers, each seeing only
-        its half. Both score the SHARED unlabeled pool; a row's
-        confidence is the better view's posterior, which also supplies
-        the pseudo-label, and the shared promotion applies (threshold:
-        either view is confident; kBest: global top-k). The final model
-        is fit on the FULL feature vector so it is usable downstream
-        exactly like the instance-split model.
-
-        Each round costs two narrow model scans of the one checkpointed
-        pool plus the MLlib fits."""
+        """Classic Blum-Mitchell co-training (viewSplit='features'): the
+        feature vector is sliced into two disjoint halves; one shared
+        labeled pool trains two classifiers, each seeing only its half.
+        This is the one-view case of the shared promotion loop: a
+        round's step fits both half-vector classifiers and scores the
+        SHARED unlabeled pool with the better view's posterior, which
+        also supplies the pseudo-label (threshold: either view is
+        confident; kBest: global top-k). The final model is fit on the
+        FULL feature vector so it is usable downstream exactly like the
+        instance-split model."""
         from pyspark.ml.feature import VectorSlicer
 
         base = self.baseClassifier
-        max_iter = self.getOrDefault(self.maxIter)
         feats = self.getOrDefault(self.featuresCol)
-        label = self.getOrDefault(self.labelCol)
-
         head = dataset.select(feats).head()
         if head is None:
             raise ValueError("empty dataset")
@@ -146,64 +141,32 @@ class CoTraining(_PromotingSSC):
         s1 = VectorSlicer(inputCol=feats, outputCol="__v1", indices=list(range(half)))
         s2 = VectorSlicer(inputCol=feats, outputCol="__v2", indices=list(range(half, dim)))
         cols = (feats, "__v1", "__v2")
-        labeled, unlabeled, n_lab_ini, n_unlab_ini = self._split_pools(
+        labeled, unlabeled, n_lab, n_unlab = self._split_pools(
             s2.transform(s1.transform(dataset)), *cols[1:]
         )
-        labeled = self._truncate_lineage(labeled)
         unlabeled = self._truncate_lineage(unlabeled.select(*cols))
-        n_lab, n_unlab = n_lab_ini, n_unlab_ini
+        view_bases = [base.copy({base.featuresCol: v}) for v in cols[1:]]
 
-        base1 = base.copy({base.featuresCol: "__v1"})
-        base2 = base.copy({base.featuresCol: "__v2"})
-        k = self._kbest_budget(n_unlab_ini)
-        it = 1
-        pool_src = unlabeled
-        while it < max_iter and n_unlab > 0:
-            model1 = base1.fit(labeled)
-            model2 = base2.fit(labeled)
-            scored = model1.transform(unlabeled).select(
-                *cols,
-                F.col("prediction").alias("__pred1"),
-                prob_max(model1.getProbabilityCol()).alias("__pm1"),
-            )
-            scored = model2.transform(scored).select(
-                *cols,
-                "__pred1",
-                "__pm1",
-                F.col("prediction").alias("__pred2"),
-                prob_max(model2.getProbabilityCol()).alias("__pm2"),
-            )
+        def step(labeled: DataFrame, pool: DataFrame) -> DataFrame:
+            scored = pool.select(*cols)
+            for i, view_base in enumerate(view_bases, 1):
+                m = view_base.fit(labeled)
+                scored = m.transform(scored).select(
+                    *scored.columns,
+                    F.col("prediction").alias(f"__pred{i}"),
+                    prob_max(m.getProbabilityCol()).alias(f"__pm{i}"),
+                )
             # the better-posterior view supplies confidence and label
-            scored = self._truncate_lineage(
+            better1 = F.col("__pm1") >= F.col("__pm2")
+            return self._truncate_lineage(
                 scored.withColumn("probMax", F.greatest("__pm1", "__pm2")).withColumn(
                     "prediction",
-                    F.when(F.col("__pm1") >= F.col("__pm2"), F.col("__pred1")).otherwise(
-                        F.col("__pred2")
-                    ),
+                    F.when(better1, F.col("__pred1")).otherwise(F.col("__pred2")),
                 )
             )
-            release(pool_src)
-            pool_src = scored
 
-            promoted, unlabeled, n_promoted = self._promote(
-                scored, k, n_unlab, *cols, tie=("__pred1", "__pred2")
-            )
-            grown = self._truncate_lineage(labeled.unionAll(promoted))
-            release(labeled)
-            labeled = grown
-            n_unlab -= n_promoted
-            n_lab += n_promoted
-            if n_unlab > 0:
-                it += 1
-
-        summary = SemiSupervisedSummary(
-            labeled_initial=n_lab_ini,
-            unlabeled_initial=n_unlab_ini,
-            labeled_final=n_lab,
-            unlabeled_final=n_unlab,
-            iterations=it,
+        view = _View(
+            self._truncate_lineage(labeled), unlabeled, n_lab, n_unlab, source=unlabeled
         )
-        final_model = base.fit(labeled.select(feats, label))
-        release(pool_src)
-        release(labeled)
-        return self._publish(SelfTrainingModel(final_model, summary))
+        model, summary = self._run_views([view], step, cols, ("__pred1", "__pred2"))
+        return self._publish(SelfTrainingModel(model, summary))

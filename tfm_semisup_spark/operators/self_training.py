@@ -7,8 +7,8 @@ unlabeled pool; promote confident predictions (threshold criterion:
 criterion: global top-k by ``probMax``, ``:172-196``) into the labeled
 pool with their predicted label; repeat until maxIter or no unlabeled
 rows remain. This is the one-view case of the promotion loop shared with
-instance-split co-training (operators/ssc_base.py, which also documents
-the physical re-engineering vs the reference).
+both co-training view splits (operators/ssc_base.py, which also
+documents the physical re-engineering vs the reference).
 
 The fitted ``SelfTrainingModel`` delegates transform to the final base
 model and carries the pool bookkeeping as ``ss_summary`` (replacing the

@@ -10,8 +10,8 @@ Three estimator bases, each adding only the Params its estimators read:
   truncation). TriTraining stops here.
 - ``_PromotingSSC`` — ``threshold``, ``criterion`` and ``kBest``:
   scoring a pool, threshold/kBest promotion, the kBest budget and the
-  one promotion loop that self-training and instance-split co-training
-  share (``_run_views``).
+  one promotion loop (``_run_views``) that self-training and both
+  co-training view splits (instances, features) share.
 
 Deliberate physical re-engineering vs the reference (SURVEY.md §4),
 made once here for every estimator:
@@ -237,30 +237,39 @@ class _PromotingSSC(_IterativeSSC):
         cols = [*(keep or (feats,)), F.col("prediction").alias(label)]
         return promoted.select(*cols), rest.select(*cols), n_promoted
 
-    def _run_views(self, views: list[_View]):
-        """The promotion loop shared by self-training (one view that
-        teaches itself) and instance-split co-training (two views that
-        teach each other): view i's labeled pool grows by the promotions
-        of view i+1 (mod the view count). Each round refits every view
-        on its labeled pool, scores and promotes its unlabeled pool; the
-        loop stops when a view's pool empties or at maxIter. The final
-        model is fit on the union of the views' labeled pools.
+    def _fit_and_score(self, labeled: DataFrame, pool: DataFrame) -> DataFrame:
+        """Default round step: fit the base classifier, score the pool."""
+        return self._score(self.baseClassifier.fit(labeled), pool)
+
+    def _run_views(self, views: list[_View], step=None, keep=(), tie=()):
+        """The promotion loop every self/co-training fit runs. A view
+        either teaches itself (self-training; feature-split co-training,
+        whose one view scores the shared pool with two half-vector
+        models) or the next view (instance-split co-training): view i's
+        labeled pool grows by the promotions of view i+1 (mod the view
+        count). Each round, ``step(labeled, unlabeled)`` (default
+        ``_fit_and_score``) returns the view's checkpointed scored pool
+        (``probMax``, ``prediction``), which ``_promote`` splits with
+        the ``keep`` and ``tie`` columns; the loop stops when a view's
+        pool empties or at maxIter. The final model is fit on the union
+        of the views' labeled pools.
 
         Returns (final base model, summary over all views)."""
         base = self.baseClassifier
+        step = step or self._fit_and_score
         max_iter = self.getOrDefault(self.maxIter)
         n_lab_ini = sum(v.n_labeled for v in views)
         n_unlab_ini = sum(v.n_unlabeled for v in views)
         k = self._kbest_budget(n_unlab_ini)
         it = 1
         while it < max_iter and all(v.n_unlabeled > 0 for v in views):
-            models = [base.fit(v.labeled) for v in views]
-            scored = [self._score(m, v.unlabeled) for m, v in zip(models, views)]
+            scored = [step(v.labeled, v.unlabeled) for v in views]
             for v, preds in zip(views, scored):
                 release(v.source)
                 v.source = preds
             promos = [
-                self._promote(preds, k, v.n_unlabeled) for preds, v in zip(scored, views)
+                self._promote(preds, k, v.n_unlabeled, *keep, tie=tie)
+                for preds, v in zip(scored, views)
             ]
             for i, v in enumerate(views):
                 taught, _, n_taught = promos[(i + 1) % len(views)]

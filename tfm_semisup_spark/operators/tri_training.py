@@ -30,13 +30,15 @@ classifier qualifies (including LinearSVC, which the reference must
 exclude — SURVEY §2.2).
 
 Physical shape (the repo's iterative-fit discipline):
-- per round, the unlabeled pool is scored ONCE by all three models
-  into one checkpointed frame (three narrow model scans fused into a
-  single pass over U, not 6 per-pair scans); same for the labeled
-  pool — all three pairwise error rates come out of ONE aggregate job;
-- candidate counts are maintained from that same aggregate (no extra
-  count() actions); pools are localCheckpoint-truncated and superseded
-  blocks released eagerly (O(1) lineage at any round count);
+- per round, one pass scores a pool with all three models (three
+  narrow model scans fused, not 6 per-pair scans). The unlabeled pool's
+  scores are the round's ONE checkpoint, since the candidate sets and
+  refits read them again; the labeled pool is scored uncheckpointed,
+  because only the aggregate reads it;
+- ONE aggregate over the union of both scored pools yields all three
+  pairwise agreement/error counts on L and the candidate counts on U
+  (no extra count() actions); superseded blocks are released eagerly
+  (O(1) lineage at any round count);
 - the only driver-side state is the 3-element (e'_i, l'_i) bookkeeping.
 """
 
@@ -59,6 +61,16 @@ from tfm_semisup_spark.operators.ssc_base import _IterativeSSC
 #: fraction, 1 - 1/e).
 _BOOT_PERMILLE = 632
 
+#: classifier i's peers (j, k)
+_PEERS = ((1, 2), (0, 2), (0, 1))
+
+
+def _with_votes(models, df: DataFrame) -> DataFrame:
+    """``df`` plus each model's prediction as ``__p{i}``, in one pass."""
+    for i, m in enumerate(models):
+        df = m.transform(df).select(*df.columns, F.col("prediction").alias(f"__p{i}"))
+    return df
+
 
 class TriTrainingModel(Model):
     """Majority vote over the three fitted base models."""
@@ -69,13 +81,7 @@ class TriTrainingModel(Model):
         self.ss_summary = ss_summary or SemiSupervisedSummary()
 
     def _transform(self, dataset: DataFrame) -> DataFrame:
-        out = dataset
-        for i, m in enumerate(self.models):
-            scored = m.transform(out)
-            out = scored.select(
-                *[F.col(c) for c in out.columns],
-                F.col("prediction").alias(f"__p{i}"),
-            )
+        out = _with_votes(self.models, dataset)
         # majority: 2-of-3 agreement wins; full disagreement -> h1
         p1, p2 = F.col("__p1"), F.col("__p2")
         vote = (
@@ -154,16 +160,6 @@ class TriTraining(_IterativeSSC):
         feats = self.getOrDefault(self.featuresCol)
         return F.xxhash64(vector_to_array(F.col(feats)), F.lit(salt))
 
-    def _score_all(self, models, pool: DataFrame, extra_cols) -> DataFrame:
-        """One pass: pool + __p0/__p1/__p2 prediction columns."""
-        out = pool
-        for i, m in enumerate(models):
-            scored = m.transform(out)
-            out = scored.select(
-                *[F.col(c) for c in out.columns], F.col("prediction").alias(f"__p{i}")
-            )
-        return self._truncate_lineage(out.select(*extra_cols, "__p0", "__p1", "__p2"))
-
     def _fit(self, dataset: DataFrame) -> TriTrainingModel:
         base = self.baseClassifier
         max_iter = self.getOrDefault(self.maxIter)
@@ -187,51 +183,44 @@ class TriTraining(_IterativeSSC):
         l_prev = [0, 0, 0]
         it = 0
         n_last_accept = [0, 0, 0]
+        votes = ("__p0", "__p1", "__p2")
+        # the round's ONE aggregate, over L ∪ U: for each classifier i
+        # with peers (j, k), the L rows where the peers agree, how many
+        # of those miss the true label, and the U rows where they agree
+        in_l = F.col("__in_l")
+        aggs = []
+        for i, (j, k) in enumerate(_PEERS):
+            peers_agree = F.col(f"__p{j}") == F.col(f"__p{k}")
+            wrong = F.col(f"__p{j}") != F.col(label)
+            aggs += [
+                F.count(F.when(in_l & peers_agree, 1)).alias(f"agree_{i}"),
+                F.count(F.when(in_l & peers_agree & wrong, 1)).alias(f"err_{i}"),
+                F.count(F.when(~in_l & peers_agree, 1)).alias(f"cand_{i}"),
+            ]
         while it < max_iter:
             it += 1
-            lab_scored = self._score_all(models, labeled, [label])
-            # ONE aggregate: for each pair (j,k), rows where they agree
-            # and how many of those miss the true label
-            agg = lab_scored.agg(
-                *[
-                    F.sum(
-                        F.when(F.col(f"__p{j}") == F.col(f"__p{k}"), 1).otherwise(0)
-                    ).alias(f"agree_{j}{k}")
-                    for j, k in ((1, 2), (0, 2), (0, 1))
-                ],
-                *[
-                    F.sum(
-                        F.when(
-                            (F.col(f"__p{j}") == F.col(f"__p{k}"))
-                            & (F.col(f"__p{j}") != F.col(label)),
-                            1,
-                        ).otherwise(0)
-                    ).alias(f"err_{j}{k}")
-                    for j, k in ((1, 2), (0, 2), (0, 1))
-                ],
-            ).collect()[0]
-            release(lab_scored)
-
-            unlab_scored = self._score_all(models, unlabeled, [feats])
-            cand_counts = unlab_scored.agg(
-                *[
-                    F.sum(
-                        F.when(F.col(f"__p{j}") == F.col(f"__p{k}"), 1).otherwise(0)
-                    ).alias(f"cand_{i}")
-                    for i, (j, k) in enumerate(((1, 2), (0, 2), (0, 1)))
-                ]
-            ).collect()[0]
+            unlab_scored = self._truncate_lineage(
+                _with_votes(models, unlabeled).select(feats, *votes)
+            )
+            both = (
+                _with_votes(models, labeled)
+                .select(F.lit(True).alias("__in_l"), label, *votes)
+                .unionAll(
+                    unlab_scored.select(F.lit(False), F.lit(None).cast("double"), *votes)
+                )
+            )
+            stats = both.agg(*aggs).collect()[0]
 
             updated = False
             new_models = list(models)
-            for i, (j, k) in enumerate(((1, 2), (0, 2), (0, 1))):
-                agree = agg[f"agree_{j}{k}"] or 0
+            for i, (j, k) in enumerate(_PEERS):
+                agree = stats[f"agree_{i}"]
                 if agree == 0:
                     continue
-                e_i = (agg[f"err_{j}{k}"] or 0) / agree
+                e_i = stats[f"err_{i}"] / agree
                 if e_i >= e_prev[i]:
                     continue
-                n_cand = cand_counts[f"cand_{i}"] or 0
+                n_cand = stats[f"cand_{i}"]
                 if n_cand == 0:
                     continue
                 li = l_prev[i]
