@@ -169,6 +169,27 @@ def test_co_training_rejects_unknown_view_split(labeled_points):
         ).fit(data)
 
 
+def test_co_training_feature_split_rejects_empty_input(labeled_points):
+    data = UnlabeledTransformer(percentageLabeled=0.3, seed=11).transform(labeled_points)
+    with pytest.raises(ValueError, match="empty dataset"):
+        CoTraining(
+            baseClassifier=DecisionTreeClassifier(seed=5), viewSplit="features"
+        ).fit(data.where(F.lit(False)))
+
+
+def test_co_training_feature_split_rejects_one_feature(spark):
+    """Two disjoint feature views need at least two features."""
+    from pyspark.ml.linalg import Vectors
+
+    rows = [(Vectors.dense([float(i)]), float(i % 2), float(i % 2)) for i in range(4)]
+    rows += [(Vectors.dense([float(i)]), float(i % 2), math.nan) for i in range(4, 8)]
+    data = spark.createDataFrame(rows, ["features", "label", "labelSelection"])
+    with pytest.raises(ValueError, match="needs >=2 features, got 1"):
+        CoTraining(
+            baseClassifier=DecisionTreeClassifier(seed=5), viewSplit="features"
+        ).fit(data)
+
+
 def test_supervised_baseline(labeled_points):
     data = UnlabeledTransformer(percentageLabeled=0.5, seed=11).transform(labeled_points)
     model = Supervised(baseClassifier=DecisionTreeClassifier(seed=5)).fit(data)
