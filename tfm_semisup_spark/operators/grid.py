@@ -55,7 +55,8 @@ RESULTS_SCHEMA = StructType(
     ]
 )
 
-FAMILIES = ("selfTraining", "coTraining", "supervised")
+_SSL_FAMILIES = {"selfTraining": SelfTraining, "coTraining": CoTraining}
+FAMILIES = (*_SSL_FAMILIES, "supervised")
 
 MASK_SEED = 11  # reference: `UnlabeledTransformer.scala:14`
 
@@ -151,24 +152,16 @@ def build_ssl_grid(
             for value in values:
                 for clf_name, make_clf in classifiers.items():
                     base = make_clf()
-                    if family == "selfTraining":
-                        est: Estimator = SelfTraining(
-                            baseClassifier=base,
-                            criterion=criterion,
-                            threshold=value,
-                            kBest=value,
-                            maxIter=max_iter,
-                        )
-                    elif family == "coTraining":
-                        est = CoTraining(
-                            baseClassifier=base,
-                            criterion=criterion,
-                            threshold=value,
-                            kBest=value,
-                            maxIter=max_iter,
-                        )
+                    if family == "supervised":
+                        est: Estimator = Supervised(baseClassifier=base)
                     else:
-                        est = Supervised(baseClassifier=base)
+                        est = _SSL_FAMILIES[family](
+                            baseClassifier=base,
+                            criterion=criterion,
+                            threshold=value,
+                            kBest=value,
+                            maxIter=max_iter,
+                        )
                     cells.append(
                         GridCell(clf_name, criterion, pct, value, est)
                     )
