@@ -77,26 +77,26 @@ EXPECTED = {
     "self-kBest-dt-3": ((170, 330, 334, 166, 3), "c5ee59efa5e59d0a", 38),
     "self-kBest-nb-1": ((170, 330, 170, 330, 1), "6b0bcff72122a9cd", 5),
     "self-kBest-nb-3": ((170, 330, 334, 166, 3), "2144b5c73cfc3ffe", 14),
-    "coinst-threshold-dt-1": ((170, 330, 170, 330, 1), "e7830118e1cd1ecf", 44),
-    "coinst-threshold-dt-3": ((170, 330, 500, 0, 1), "e04e1bf0f4dcfda6", 52),
-    "coinst-threshold-nb-1": ((170, 330, 170, 330, 1), "6b0bcff72122a9cd", 20),
-    "coinst-threshold-nb-3": ((170, 330, 500, 0, 2), "ad50638051008115", 40),
-    "coinst-kBest-dt-1": ((170, 330, 170, 330, 1), "e7830118e1cd1ecf", 44),
-    "coinst-kBest-dt-3": ((170, 330, 490, 10, 2), "8f0d72931dfa9a5f", 74),
-    "coinst-kBest-nb-1": ((170, 330, 170, 330, 1), "6b0bcff72122a9cd", 20),
-    "coinst-kBest-nb-3": ((170, 330, 490, 10, 2), "ad50638051008115", 34),
-    "cofeat-threshold-dt-1": ((170, 330, 170, 330, 1), "e7830118e1cd1ecf", 35),
+    "coinst-threshold-dt-1": ((170, 330, 170, 330, 1), "e7830118e1cd1ecf", 20),
+    "coinst-threshold-dt-3": ((170, 330, 500, 0, 1), "e04e1bf0f4dcfda6", 48),
+    "coinst-threshold-nb-1": ((170, 330, 170, 330, 1), "6b0bcff72122a9cd", 12),
+    "coinst-threshold-nb-3": ((170, 330, 500, 0, 2), "ad50638051008115", 36),
+    "coinst-kBest-dt-1": ((170, 330, 170, 330, 1), "e7830118e1cd1ecf", 20),
+    "coinst-kBest-dt-3": ((170, 330, 490, 10, 2), "8f0d72931dfa9a5f", 70),
+    "coinst-kBest-nb-1": ((170, 330, 170, 330, 1), "6b0bcff72122a9cd", 12),
+    "coinst-kBest-nb-3": ((170, 330, 490, 10, 2), "ad50638051008115", 30),
+    "cofeat-threshold-dt-1": ((170, 330, 170, 330, 1), "e7830118e1cd1ecf", 15),
     "cofeat-threshold-dt-3": ((170, 330, 500, 0, 1), "0d8b0c61b9d83007", 39),
-    "cofeat-threshold-nb-1": ((170, 330, 170, 330, 1), "6b0bcff72122a9cd", 11),
+    "cofeat-threshold-nb-1": ((170, 330, 170, 330, 1), "6b0bcff72122a9cd", 7),
     "cofeat-threshold-nb-3": ((170, 330, 500, 0, 2), "5e6b55a519617bd6", 23),
-    "cofeat-kBest-dt-1": ((170, 330, 170, 330, 1), "e7830118e1cd1ecf", 35),
-    "cofeat-kBest-dt-3": ((170, 330, 334, 166, 3), "825104781f4772c7", 80),
-    "cofeat-kBest-nb-1": ((170, 330, 170, 330, 1), "6b0bcff72122a9cd", 11),
-    "cofeat-kBest-nb-3": ((170, 330, 334, 166, 3), "2118abcdacff4275", 24),
+    "cofeat-kBest-dt-1": ((170, 330, 170, 330, 1), "e7830118e1cd1ecf", 15),
+    "cofeat-kBest-dt-3": ((170, 330, 334, 166, 3), "825104781f4772c7", 60),
+    "cofeat-kBest-nb-1": ((170, 330, 170, 330, 1), "6b0bcff72122a9cd", 7),
+    "cofeat-kBest-nb-3": ((170, 330, 334, 166, 3), "2118abcdacff4275", 20),
     "supervised-dt": ((170, 330, 170, 330, 0), "e7830118e1cd1ecf", 12),
     "supervised-nb": ((170, 330, 170, 330, 0), "6b0bcff72122a9cd", 4),
-    "tri-dt": ((170, 330, 477, 23, 3), "98d8154e528e9b5e", 102),
-    "tri-nb": ((170, 330, 197, 303, 3), "cd922fe48b5dd53b", 38),
+    "tri-dt": ((170, 330, 477, 23, 3), "98d8154e528e9b5e", 93),
+    "tri-nb": ((170, 330, 197, 303, 3), "cd922fe48b5dd53b", 29),
 }
 
 
