@@ -148,7 +148,7 @@ class CoTraining(_PromotingSSC):
         view_bases = [base.copy({base.featuresCol: v}) for v in cols[1:]]
 
         def step(labeled: DataFrame, pool: DataFrame) -> DataFrame:
-            scored = pool.select(*cols)
+            scored = pool.select(*cols)  # drops the label a promotion's rest carries
             for i, view_base in enumerate(view_bases, 1):
                 m = view_base.fit(labeled)
                 scored = m.transform(scored).select(
@@ -157,11 +157,12 @@ class CoTraining(_PromotingSSC):
                     prob_max(m.getProbabilityCol()).alias(f"__pm{i}"),
                 )
             # the better-posterior view supplies confidence and label
-            better1 = F.col("__pm1") >= F.col("__pm2")
             return self._truncate_lineage(
                 scored.withColumn("probMax", F.greatest("__pm1", "__pm2")).withColumn(
                     "prediction",
-                    F.when(better1, F.col("__pred1")).otherwise(F.col("__pred2")),
+                    F.when(F.col("__pm1") >= F.col("__pm2"), F.col("__pred1")).otherwise(
+                        F.col("__pred2")
+                    ),
                 )
             )
 
